@@ -54,8 +54,8 @@ object Demo {
       println(s"=== dlq: ${IceLite.read(spark, dlq).count()} malformed events")
     }
     // the auto-compaction surface: metadata-only crowding probe, compacts
-    // only when some bucket exceeds the threshold (a pipeline calls this
-    // after every commit, gated on CommitResult.maxBucketFiles)
+    // only when some bucket exceeds the threshold (a pipeline can call
+    // this after every commit)
     val crowd = IceLite.load(table).filesPerBucket.values.maxOption.getOrElse(0)
     val compacted = graft.operators.Maintenance.compactIfNeeded(
       spark, table, maxFilesPerBucket = 2)

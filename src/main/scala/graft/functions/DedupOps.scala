@@ -524,8 +524,10 @@ object DedupOps {
     *
     * SIZE-CHECKED driver fast path (the [[dedupPassages]]
     * broadcast/shuffle adaptive pattern): when the edge set fits
-    * `maxDriverEdges` (bare integral id pairs — ≤ ~32 MB of longs at the
-    * default) the components are resolved with a driver-side union-find
+    * `maxDriverEdges` (integral ids; both orientations are collected as
+    * boxed two-field `Row`s — 4M of them at the default, a few hundred MB
+    * of driver heap, not the ~64 MB bare longs would take) the
+    * components are resolved with a driver-side union-find
     * in ONE pass over the collected pairs, skipping the loop's per-round
     * join/aggregate/checkpoint jobs entirely — at bench scale those
     * rounds are pure fixed cost over a graph of a few hundred nodes.
@@ -544,7 +546,10 @@ object DedupOps {
     // propagation is duplicate-insensitive (every aggregation below is a
     // min) and this codebase's pair producers emit distinct (a < b)
     // pairs by construction — the distinct was a pure extra shuffle.
-    val edges = pairs.select(explode(array(
+    // An edge with a null endpoint joins nothing: both branches drop it
+    // here, before the size check, so they see the same edge set.
+    val edges = pairs.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(explode(array(
         struct(col(aCol).as("x"), col(bCol).as("y")),
         struct(col(bCol).as("x"), col(aCol).as("y")))).as("e"))
       .select(col("e.x").as("x"), col("e.y").as("y"))

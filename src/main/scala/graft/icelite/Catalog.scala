@@ -25,6 +25,23 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 class CommitConflictException(message: String)
   extends RuntimeException(message)
 
+object CommitConflictException {
+  /** Run `body`, re-executing it while it throws a
+    * [[CommitConflictException]], at most `attempts` times in all: the one
+    * retry loop of every read-then-replace operation (SQL DML,
+    * compaction, tombstone expiry). `body` must re-read the table, so a
+    * re-execution works against the version the winner committed. The
+    * last attempt's conflict is rethrown; any other exception propagates
+    * at once.
+    */
+  def retry[A](attempts: Int = 3)(body: => A): A =
+    try body
+    catch {
+      case _: CommitConflictException if attempts > 1 =>
+        retry(attempts - 1)(body)
+    }
+}
+
 trait Catalog {
   /** Atomically create metadata version `v` iff it does not exist.
     * @return true iff THIS call created it (the CAS succeeded). */

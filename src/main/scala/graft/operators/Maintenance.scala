@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.icelite.IceLite
+import graft.icelite.{CommitConflictException, IceLite}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -29,24 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** Re-run `body` when its read-then-replace commit loses to a concurrent
-    * state-changing commit (the [[graft.icelite.CommitConflictException]]
-    * validation): maintenance is state-preserving, so re-executing against
-    * the new current version is always the right response.
-    */
-  private def retryOnConflict[A](attempts: Int = 3)(body: => A): A = {
-    var left = attempts
-    while (true) {
-      try return body
-      catch {
-        case e: graft.icelite.CommitConflictException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
-
   /** Rewrite every bucket with more than `maxFilesPerBucket` live files.
     * Returns the number of buckets compacted. Safe to run CONCURRENTLY
     * with ingest: the commit is validated against the version the rows
@@ -54,7 +36,7 @@ object Maintenance {
     * conflict and re-execute rather than clobber the merge's rows.
     */
   def compact(spark: SparkSession, dir: String, epochKey: String,
-      maxFilesPerBucket: Int = 4): Int = retryOnConflict() {
+      maxFilesPerBucket: Int = 4): Int = CommitConflictException.retry() {
     val m = IceLite.load(dir)
     if (m.committedEpoch(epochKey)) return 0
     val crowded = m.filesPerBucket.filter(_._2 > maxFilesPerBucket).keySet
@@ -75,7 +57,7 @@ object Maintenance {
     * commit, no storage listing) checks for buckets holding more than
     * `maxFilesPerBucket` live files — when none, returns 0 without
     * consuming an epoch, so an ingest pipeline can call this after every
-    * commit (gated on [[Merge.CommitResult.maxBucketFiles]]) for pennies.
+    * commit for pennies.
     * When crowding exists it runs one targeted [[compact]] under a fresh
     * NON-NUMERIC epoch key (concurrent auto-compactions must never mask
     * each other through the epoch high-water mark), rewriting only the
@@ -98,7 +80,7 @@ object Maintenance {
     * arrival after that would resurrect a deleted url.
     */
   def expireTombstones(spark: SparkSession, dir: String, epochKey: String,
-      olderThan: java.sql.Timestamp): Long = retryOnConflict() {
+      olderThan: java.sql.Timestamp): Long = CommitConflictException.retry() {
     val m = IceLite.load(dir)
     if (m.committedEpoch(epochKey)) return 0L
     val tsName = m.currentSchema.fields.find(_.id == Merge.versionFieldId)

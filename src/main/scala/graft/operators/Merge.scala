@@ -38,19 +38,15 @@ import org.apache.spark.sql.types._
   */
 object Merge {
 
+  /** `snapshotId` is the snapshot holding this epoch: the new one, or the
+    * current one when the epoch was already committed (a replay). */
   case class CommitResult(
       epochKey: String,
       committed: Boolean,
       snapshotId: Long,
-      affectedBuckets: Set[Int],
-      eventsIn: Long,
       rowsUpserted: Long,
       rowsDeleted: Long,
-      lineage: Seq[LineageRow],
-      // post-commit compaction-pressure signal: the crowdedest bucket's
-      // live file count (metadata-only) — callers gate
-      // Maintenance.compactIfNeeded on it instead of listing storage
-      maxBucketFiles: Int = 0)
+      lineage: Seq[LineageRow])
 
   case class LineageRow(partition: Int, minOffset: Long, maxOffset: Long,
       rowsApplied: Long)
@@ -79,8 +75,7 @@ object Merge {
     val pre = graft.util.Phase("merge.load") { IceLite.load(tableDir) }
     if (pre.committedEpoch(epochKey)) {
       return CommitResult(epochKey, committed = false, pre.snapshotId,
-        Set.empty, 0L, 0L, 0L, Nil,
-        pre.filesPerBucket.values.maxOption.getOrElse(0))
+        0L, 0L, Nil)
     }
     val schema = pre.currentSchema
     val nBuckets = pre.numBuckets
@@ -181,9 +176,7 @@ object Merge {
           baseVersion = Some(pre.version))
       }
       return CommitResult(epochKey, committed = post.epochKey == epochKey,
-        post.snapshotId, (0 until nBuckets).toSet, eventsIn = -1L,
-        rowsUpserted = -1L, rowsDeleted = -1L, lineage = Nil,
-        maxBucketFiles = post.filesPerBucket.values.maxOption.getOrElse(0))
+        post.snapshotId, rowsUpserted = -1L, rowsDeleted = -1L, lineage = Nil)
     }
 
     val newRows = deduped.select(valueCols ++ internals: _*).cache()
@@ -244,8 +237,7 @@ object Merge {
       newFiles = staged, replacedBuckets = affected,
       baseVersion = Some(pre.version))
     CommitResult(epochKey, committed = post.epochKey == epochKey,
-      post.snapshotId, affected, eventsIn = -1L,
-      rowsUpserted = applied - deletes, rowsDeleted = deletes, lineage,
-      maxBucketFiles = post.filesPerBucket.values.maxOption.getOrElse(0))
+      post.snapshotId, rowsUpserted = applied - deletes,
+      rowsDeleted = deletes, lineage)
   }
 }

@@ -119,8 +119,8 @@ object SqlMerge {
   /** REPEATABLE across two evaluations of the same statement? False for
     * nondeterministic expressions AND for any subquery — a subquery's plan
     * can hide a LIMIT, a TABLESAMPLE or an icelite scan (mutable between
-    * the probe and the write) from the outer plan-node traversal, so it
-    * forces the single-evaluation checkpoint path wholesale.
+    * the source-key probe and the join) from the outer plan-node
+    * traversal, so it disables source-key pruning wholesale.
     */
   private def repeatableExpr(e: Expression): Boolean = !e.exists {
     case _: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
@@ -170,7 +170,6 @@ object SqlMerge {
             a.name, a.dataType, nullable = true)
         }))
     val keyAttr = tgtAttrs.head
-    val keyName = keyAttr.name
     val nB = pre.numBuckets
 
     val matched = clauses(merge.matchedActions, tgtAttrs)
@@ -200,7 +199,6 @@ object SqlMerge {
     // An icelite relation inside the SOURCE is equally non-repeatable: a
     // concurrent commit landing between the two evaluations changes the
     // row set, and baseVersion conflict detection guards only the TARGET
-    // — so it forces the single-evaluation checkpoint path too
     // (version-pinning source icelite scans is the sharper future fix).
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Sample}
     val srcDeterministic = !merge.sourceTable.exists {
@@ -214,21 +212,20 @@ object SqlMerge {
     val srcDF = PlanBridge.ofRows(spark, merge.sourceTable)
     val scanBuckets: Option[Set[Int]] =
       if (!canPrune) None
-      else {
-        val bs = srcDF.select(Salt.bucket(cc(srcKeyExpr.get), nB).as("__b"))
-          .filter(col("__b").isNotNull).distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (bs.size * 5 >= nB * 4) None else Some(bs) // ≥80%: not worth it
-      }
+      else Some(srcDF.select(Salt.bucket(cc(srcKeyExpr.get), nB).as("__b"))
+        .filter(col("__b").isNotNull).distinct()
+        .collect().map(_.getInt(0)).toSet)
 
-    // ---- the merge dataflow over a given target scan: version-pinned,
-    // optionally bucket-pruned, WITH the stored CDC position columns —
-    // and with the analyzer's attribute ids grafted on via explicit-exprId
-    // aliases, so the merge condition and assignment expressions resolve
-    // against it unchanged
-    def mergedFrame(buckets: Option[Set[Int]]): DataFrame = {
-      val tgtDF = pinnedTarget(spark, dir, pre.version, tgtAttrs, buckets)
+    // inserts (incl. duplicate source keys) and key-reassigning updates
+    // can put a new key into a bucket — those need the uniqueness guard
+    // and the tombstone re-insert anti-join (see commitRewrite)
+    val introducesKeys = inserts.nonEmpty || !updatesPreserveKey
 
+    // ---- the merge dataflow over the pinned target scan, whose user
+    // columns carry the analyzer's attribute ids — so the merge condition
+    // and assignment expressions resolve against it unchanged
+    rewrite(spark, dir, pre, tgtAttrs, scanBuckets, "sqlmerge",
+        introducesKeys, newSchema) { tgtDF =>
       val tb = tgtDF
         .withColumn("__rid", monotonically_increasing_id())
         .withColumn("__t_ex", lit(true))
@@ -302,88 +299,8 @@ object SqlMerge {
           .otherwise(clauseValue(nmbs, col("__tact"), j, old))
       }
 
-      withCard.select(
-        tgtAttrs.indices.map(j => finalValue(j).as(tgtAttrs(j).name)) ++ Seq(
-          keep.as("__keep"), changed.as("__changed"),
-          when(col("__t_ex").isNotNull, Salt.bucket(cc(keyAttr), nB))
-            .as("__oldb"),
-          col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
-        .withColumn("__newb",
-          when(col("__keep"), Salt.bucket(col(keyName), nB)))
-    }
-
-    def affectedOf(df: DataFrame): Set[Int] =
-      df.filter(col("__changed"))
-        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
-        .filter(col("b").isNotNull)
-        .distinct().collect().map(_.getInt(0)).toSet
-    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
-      df.filter(col("__keep") && col("__newb").isInCollection(affected))
-        .select(tgtAttrs.map(a => col(a.name)) ++ Seq(col("_offset"),
-          col("_partition"), lit(false).as("_deleted"),
-          col("__newb").as("_bucket")): _*)
-    // inserts (incl. duplicate source keys) and key-reassigning updates
-    // can put a new key into a bucket — those need the uniqueness guard
-    // and the tombstone re-insert anti-join (see commitRewrite)
-    val introducesKeys = inserts.nonEmpty || !updatesPreserveKey
-
-    // plan REPEATABILITY across two evaluations (the affected-bucket probe
-    // and the write): same bar as scan pruning — nondeterministic clause
-    // conditions/assignments or a nondeterministic source force the
-    // single-evaluation checkpoint path
-    val deterministicPlan = srcDeterministic &&
-      repeatableExpr(merge.mergeCondition) &&
-      (matched ++ inserts ++ nmbs).forall(c =>
-        c.cond.forall(repeatableExpr) && c.assigns.values.forall(repeatableExpr))
-
-    if (scanBuckets.isEmpty && deterministicPlan) {
-      // ---- UNPRUNED, repeatable statement: two-pass — an aggregate-only
-      // probe over the full join finds the affected buckets, then the
-      // write re-derives the merge, with the TARGET scan pruned to those
-      // buckets WHEN that is provably sound. Cost: join evaluated twice,
-      // but the table is never spooled to executor-local disk (the
-      // checkpoint path writes the whole table once to local disk and
-      // again to the table — 2x write; at 100 TB the 2x read is the
-      // right trade).
-      //
-      // Pass-2 target-pruning soundness: every changed row's old AND new
-      // bucket is in `affected`, so pruning only hides UNCHANGED matched
-      // target rows — whose source partners then look unmatched in pass
-      // 2 and can fire a spurious INSERT. That insert is harmless only
-      // when its key provably equals the hidden match's key (the merge
-      // condition pins the key and every insert uses it): the spurious
-      // row then aims at the hidden row's UNaffected bucket and the
-      // `__newb IN affected` filter in outOf drops it. With an insert
-      // key unrelated to the match key, the spurious row could land
-      // INSIDE an affected bucket — so those statements re-scan the full
-      // target in pass 2 (still no checkpoint spool).
-      val affected = affectedOf(mergedFrame(None))
-      if (affected.isEmpty) return // every clause missed: a no-op
-      val pass2Buckets =
-        if (inserts.isEmpty || (srcKeyExpr.isDefined && insertsUseKey))
-          Some(affected)
-        else None
-      val out = outOf(mergedFrame(pass2Buckets), affected)
-      commitRewrite(spark, dir, pre, out, affected, keyName, nB, "sqlmerge",
-        introducesKeys, newSchema)
-    } else {
-      // ---- pruned (cheap: only the source keys' buckets) or
-      // nondeterministic: ONE materialization feeds the probe AND the
-      // write, and freezes the nondeterministic row ids (CLAUDE.md:
-      // checkpoint, not cache, so per-statement frames don't pin the
-      // CacheManager). try/finally: the no-op return, a cardinality
-      // violation and a commit conflict must all release the checkpoint.
-      val merged = mergedFrame(scanBuckets).localCheckpoint()
-      try {
-        val affected = affectedOf(merged)
-        if (affected.isEmpty) return // every clause missed: a no-op
-        scanBuckets.foreach { sbs =>
-          if (!affected.subsetOf(sbs)) sys.error(
-            s"internal: pruning unsound — affected $affected ⊄ scanned $sbs")
-        }
-        commitRewrite(spark, dir, pre, outOf(merged, affected), affected,
-          keyName, nB, "sqlmerge", introducesKeys, newSchema)
-      } finally merged.unpersist()
+      mark(withCard, tgtAttrs, nB, finalValue, keep, changed,
+        oldb = when(col("__t_ex").isNotNull, Salt.bucket(cc(keyAttr), nB)))
     }
   }
 
@@ -420,6 +337,61 @@ object SqlMerge {
     PlanBridge.ofRows(spark, Project(projectList, basePlan))
   }
 
+  /** The marked frame every statement hands [[rewrite]]: each target
+    * column's value after the statement, the row's stored CDC position
+    * (`_offset`/`_partition`, null for an inserted row), `__keep` (the row
+    * survives), `__changed` (a clause fired on it), `__oldb` (its bucket
+    * before the statement, null for an inserted row) and `__newb` (the
+    * bucket of its key after the statement).
+    */
+  private def mark(rows: DataFrame, tgtAttrs: Seq[AttributeReference],
+      nB: Int, value: Int => Column, keep: Column, changed: Column,
+      oldb: Column): DataFrame =
+    rows.select(
+      tgtAttrs.indices.map(j => value(j).as(tgtAttrs(j).name)) ++ Seq(
+        keep.as("__keep"), changed.as("__changed"), oldb.as("__oldb"),
+        col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
+      .withColumn("__newb", Salt.bucket(col(tgtAttrs.head.name), nB))
+
+  /** The one read-then-replace path of all three statements: ONE
+    * materialization of the marked frame over the (optionally
+    * bucket-pruned) pinned target feeds both the affected-bucket probe and
+    * the write, and freezes nondeterministic expressions and row ids
+    * (checkpoint, not cache, so per-statement frames don't pin the
+    * CacheManager). A pruned scan never reads more than an unpruned one.
+    * Every changed row's old AND new bucket is affected; the rewrite is
+    * the kept rows landing in affected buckets. try/finally: the no-op
+    * return, a cardinality violation and a commit conflict must all
+    * release the checkpoint.
+    */
+  private def rewrite(spark: SparkSession, dir: String,
+      pre: IceLite.Metadata, tgtAttrs: Seq[AttributeReference],
+      scanBuckets: Option[Set[Int]], opName: String,
+      introducesKeys: Boolean, newSchema: Option[IceLite.Schema] = None)(
+      frame: DataFrame => DataFrame): Unit = {
+    val marked =
+      frame(pinnedTarget(spark, dir, pre.version, tgtAttrs, scanBuckets))
+        .localCheckpoint()
+    try {
+      val affected = marked.filter(col("__changed"))
+        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
+        .filter(col("b").isNotNull)
+        .distinct().collect().map(_.getInt(0)).toSet
+      if (affected.isEmpty) return // every clause missed: a no-op
+      scanBuckets.foreach { sbs =>
+        if (!affected.subsetOf(sbs)) sys.error(
+          s"internal: pruning unsound — affected $affected ⊄ scanned $sbs")
+      }
+      val out = marked
+        .filter(col("__keep") && col("__newb").isInCollection(affected))
+        .select(tgtAttrs.map(a => col(a.name)) ++ Seq(col("_offset"),
+          col("_partition"), lit(false).as("_deleted"),
+          col("__newb").as("_bucket")): _*)
+      commitRewrite(spark, dir, pre, out, affected, tgtAttrs.head.name,
+        opName, introducesKeys, newSchema)
+    } finally marked.unpersist()
+  }
+
   /** Commit `out` (user columns + `_offset`/`_partition`/`_deleted`/
     * `_bucket`) as the new content of the `affected` buckets: those
     * buckets' CDC tombstones are preserved (late-data fencing) unless the
@@ -442,9 +414,8 @@ object SqlMerge {
     */
   private def commitRewrite(spark: SparkSession, dir: String,
       pre: IceLite.Metadata, out: DataFrame, affected: Set[Int],
-      keyName: String, nB: Int, opName: String,
-      introducesKeys: Boolean = false,
-      newSchema: Option[IceLite.Schema] = None): Unit = {
+      keyName: String, opName: String, introducesKeys: Boolean,
+      newSchema: Option[IceLite.Schema]): Unit = {
     val guarded =
       if (!introducesKeys) out
       else {
@@ -478,7 +449,7 @@ object SqlMerge {
         val tombs1 = (if (introducesKeys)
             tombs0.join(out.select(col(keyName)), Seq(keyName), "left_anti")
           else tombs0)
-          .withColumn("_bucket", Salt.bucket(col(keyName), nB))
+          .withColumn("_bucket", Salt.bucket(col(keyName), pre.numBuckets))
         // atomic evolution: tombstones were read under the pre-statement
         // schema — null-fill the statement's new columns, as any
         // post-evolution read of old files would
@@ -559,48 +530,10 @@ object SqlMerge {
         when(hit, cc(e).cast(tgtAttrs(j).dataType)).otherwise(old))
         .getOrElse(old)
     }
-    def markedFrame(buckets: Option[Set[Int]]): DataFrame =
-      pinnedTarget(spark, dir, pre.version, tgtAttrs, buckets).select(
-        tgtAttrs.indices.map(j => finalValue(j).as(tgtAttrs(j).name)) ++ Seq(
-          hit.as("__hit"), Salt.bucket(cc(keyAttr), nB).as("__oldb"),
-          col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
-        .withColumn("__newb", Salt.bucket(col(keyAttr.name), nB))
-    def affectedOf(df: DataFrame): Set[Int] =
-      df.filter(col("__hit"))
-        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
-        .filter(col("b").isNotNull)
-        .distinct().collect().map(_.getInt(0)).toSet
-    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
-      df.filter(col("__newb").isInCollection(affected))
-        .select(tgtAttrs.map(a => col(a.name)) ++ Seq(col("_offset"),
-          col("_partition"), lit(false).as("_deleted"),
-          col("__newb").as("_bucket")): _*)
-
-    // repeatability bar for the two-evaluation path: the WHERE and (when
-    // the key moves) the key assignment must be deterministic — other
-    // assignment values are only ever evaluated once, in the write pass
-    val repeatable = repeatableExpr(cond) &&
-      (!keyReassigned || assigns.get(0).forall(repeatableExpr))
-    if (scanBuckets.isEmpty && repeatable) {
-      // unpruned full-table statement: aggregate-only probe, then the
-      // write re-scans ONLY the affected buckets — the table is read
-      // twice, never spooled to executor-local checkpoint disk (hit rows'
-      // old and new buckets are both in `affected`, so the restricted
-      // scan covers every row the rewrite needs)
-      val affected = affectedOf(markedFrame(None))
-      if (affected.isEmpty) return
-      commitRewrite(spark, dir, pre,
-        outOf(markedFrame(Some(affected)), affected), affected,
-        keyAttr.name, nB, "sqlupdate", introducesKeys = keyReassigned)
-    } else {
-      val marked = markedFrame(scanBuckets)
-        .localCheckpoint() // freeze: one evaluation feeds probe AND write
-      try {
-        val affected = affectedOf(marked)
-        if (affected.isEmpty) return
-        commitRewrite(spark, dir, pre, outOf(marked, affected), affected,
-          keyAttr.name, nB, "sqlupdate", introducesKeys = keyReassigned)
-      } finally marked.unpersist()
+    rewrite(spark, dir, pre, tgtAttrs, scanBuckets, "sqlupdate",
+        introducesKeys = keyReassigned) { tgt =>
+      mark(tgt, tgtAttrs, nB, finalValue, keep = lit(true), changed = hit,
+        oldb = Salt.bucket(cc(keyAttr), nB))
     }
   }
 
@@ -620,40 +553,12 @@ object SqlMerge {
     schemaGuard(pre, tgtAttrs, dir)
     val keyAttr = tgtAttrs.head
     val nB = pre.numBuckets
-    val scanBuckets = bucketsFromCondition(delete.condition, keyAttr, nB)
-
-    def markedFrame(buckets: Option[Set[Int]]): DataFrame =
-      pinnedTarget(spark, dir, pre.version, tgtAttrs, buckets)
-        .select(tgtAttrs.map(a => cc(a).as(a.name)) ++ Seq(
-          coalesce(cc(delete.condition), lit(false)).as("__hit"),
-          Salt.bucket(cc(keyAttr), nB).as("__b"),
-          col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
-    def affectedOf(df: DataFrame): Set[Int] =
-      df.filter(col("__hit"))
-        .select(col("__b")).distinct().collect().map(_.getInt(0)).toSet
-    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
-      df.filter(!col("__hit") && col("__b").isInCollection(affected))
-        .select(tgtAttrs.map(a => col(a.name)) ++ Seq(col("_offset"),
-          col("_partition"), lit(false).as("_deleted"),
-          col("__b").as("_bucket")): _*)
-
-    if (scanBuckets.isEmpty && repeatableExpr(delete.condition)) {
-      // unpruned full-table statement: aggregate-only probe, then the
-      // write re-scans only the affected buckets (no checkpoint spool)
-      val affected = affectedOf(markedFrame(None))
-      if (affected.isEmpty) return
-      commitRewrite(spark, dir, pre,
-        outOf(markedFrame(Some(affected)), affected), affected,
-        keyAttr.name, nB, "sqldelete")
-    } else {
-      val marked = markedFrame(scanBuckets)
-        .localCheckpoint() // freeze: one evaluation feeds probe AND write
-      try {
-        val affected = affectedOf(marked)
-        if (affected.isEmpty) return
-        commitRewrite(spark, dir, pre, outOf(marked, affected), affected,
-          keyAttr.name, nB, "sqldelete")
-      } finally marked.unpersist()
+    val hit = coalesce(cc(delete.condition), lit(false))
+    rewrite(spark, dir, pre, tgtAttrs,
+        bucketsFromCondition(delete.condition, keyAttr, nB), "sqldelete",
+        introducesKeys = false) { tgt =>
+      mark(tgt, tgtAttrs, nB, j => cc(tgtAttrs(j)), keep = !hit,
+        changed = hit, oldb = Salt.bucket(cc(keyAttr), nB))
     }
   }
 }
@@ -666,15 +571,7 @@ object SqlMerge {
 sealed trait SqlDmlCommand extends LeafRunnableCommand {
   protected def executeOnce(spark: SparkSession): Unit
   override def run(spark: SparkSession): Seq[Row] = {
-    var left = 3
-    while (true) {
-      try { executeOnce(spark); return Seq.empty }
-      catch {
-        case e: CommitConflictException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
+    CommitConflictException.retry()(executeOnce(spark))
     Seq.empty
   }
 }

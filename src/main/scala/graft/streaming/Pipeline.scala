@@ -168,7 +168,6 @@ object Pipeline {
         // 3. lineage: one row per source partition of this batch, built
         //    driver-side from already-collected stats (deterministic on
         //    replay — derived from batch content, not the table diff)
-        val snapshotId = IceLite.load(cfg.tableDir).snapshotId
         // applied counts come from the merge result when it ran, and are
         // recomputed from the (identical) deduped batch when the merge was
         // a no-op replay after a crash — lineage rows must not depend on
@@ -183,7 +182,7 @@ object Pipeline {
         import spark.implicits._
         val lineageDf = ranges.map { r =>
           (epochId, r.getInt(0), r.getLong(1), r.getLong(2),
-            appliedBy.getOrElse(r.getInt(0), 0L), snapshotId,
+            appliedBy.getOrElse(r.getInt(0), 0L), res.snapshotId,
             new java.sql.Timestamp(System.currentTimeMillis()))
         }.toSeq.toDF("epoch_id", "partition", "min_offset", "max_offset",
           "rows_applied", "snapshot_id", "commit_ts")

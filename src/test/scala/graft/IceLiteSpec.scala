@@ -259,4 +259,32 @@ class IceLiteSpec extends SparkTestBase {
     assert(metaBytes < 16 * 1024,
       s"metadata file is $metaBytes bytes after 1000 commits")
   }
+
+  test("CommitConflictException.retry: first success after a conflict, " +
+      "rethrows the last conflict, never retries other exceptions") {
+    import graft.icelite.CommitConflictException
+    var calls = 0
+    val got = CommitConflictException.retry() {
+      calls += 1
+      if (calls < 3) throw new CommitConflictException(s"lost $calls")
+      "won"
+    }
+    assert(got == "won" && calls == 3)
+    calls = 0
+    val last = intercept[CommitConflictException] {
+      CommitConflictException.retry(attempts = 2) {
+        calls += 1
+        throw new CommitConflictException(s"lost $calls")
+      }
+    }
+    assert(calls == 2 && last.getMessage == "lost 2")
+    calls = 0
+    intercept[IllegalStateException] {
+      CommitConflictException.retry() {
+        calls += 1
+        throw new IllegalStateException("not a conflict")
+      }
+    }
+    assert(calls == 1)
+  }
 }

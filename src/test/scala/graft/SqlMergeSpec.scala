@@ -439,14 +439,13 @@ class SqlMergeSpec extends SparkTestBase {
     assert(state(dir) === Map("c" -> (1L, "x"), "b" -> (2L, "x")))
   }
 
-  test("full-table (unpruned) UPDATE takes the two-pass path: correct " +
-      "result, only hit buckets rewritten; a nondeterministic WHERE " +
-      "falls back to the single-evaluation checkpoint path") {
+  test("unpruned UPDATE rewrites only hit buckets; rand() WHERE updates all") {
     val urls = (0 until 32).map(i => s"f$i")
     val (t, dir) = mkTable(8, urls.map(u => (u, u.drop(1).toLong, "x", false)))
     val before = IceLite.load(dir)
     // hits rows 30,31 only — WHERE on a NON-key column, so no pruning:
-    // the two-pass probe must still narrow the rewrite to their buckets
+    // the affected-bucket probe must still narrow the rewrite to their
+    // buckets
     spark.sql(s"UPDATE $t SET tag = 'big' WHERE v >= 30")
     val after = IceLite.load(dir)
     val changed = (0 until 8).filter { b =>
@@ -459,14 +458,12 @@ class SqlMergeSpec extends SparkTestBase {
     assert(state(dir)("f30") == (30L, "big") && state(dir)("f31") == (31L, "big"))
     assert(state(dir)("f0") == (0L, "x"))
     // nondeterministic WHERE (rand() < 2 is always true but not
-    // repeatable): must route through the checkpoint path and update all
+    // repeatable): one checkpointed evaluation must update all
     spark.sql(s"UPDATE $t SET tag = 'all' WHERE rand() < 2")
     assert(state(dir).values.forall(_._2 == "all"))
   }
 
-  test("two-pass merge on a NON-key condition with an unrelated insert " +
-      "key: a matched-but-unchanged row outside the affected buckets " +
-      "must not resurface as a spurious INSERT") {
+  test("unpruned MERGE on a non-key condition inserts no spurious row") {
     val (t, dir) = mkTable(4, Seq(("a", 1L, "x", false), ("b", 2L, "x", false)))
     val bucketOf = (u: String) => spark.range(1)
       .select(Salt.bucket(lit(u), 4)).head.getInt(0)
@@ -487,6 +484,41 @@ class SqlMergeSpec extends SparkTestBase {
     """)
     assert(state(dir) === Map("a" -> (1L, "upd"), "b" -> (2L, "x")),
       "spurious insert from pruned pass-2 target scan")
+  }
+
+  test("pinned and unpruned UPDATE, MERGE, DELETE leave twin tables equal") {
+    // same statements on twin tables, once with the key pinned (pruned
+    // target scan) and once behind an OR (full-table scan); the twins
+    // must match row for row after each one, tombstones included
+    val rows = Seq(("a", 1L, "x", false), ("b", 2L, "x", false),
+      ("c", 3L, "x", false), ("d", 4L, "x", false), ("e", 5L, "x", false),
+      ("dead1", 6L, "x", true), ("dead2", 7L, "x", true))
+    val (pt, pdir) = mkTable(4, rows)
+    val (ut, udir) = mkTable(4, rows)
+    def internal(dir: String) = IceLite.readInternal(spark, dir)
+      .select("url", "v", "tag", "_offset", "_partition", "_deleted")
+      .collect().toSet
+    def both(pinned: String, unpruned: String): Unit = {
+      spark.sql(pinned)
+      spark.sql(unpruned)
+      assert(internal(pdir) == internal(udir), s"$pinned vs $unpruned")
+    }
+    both(s"UPDATE $pt SET v = v + 100, tag = 'u' WHERE url IN ('a', 'b')",
+      s"UPDATE $ut SET v = v + 100, tag = 'u' WHERE url = 'a' OR url = 'b'")
+    // 'dead1' re-inserts a tombstoned key: its tombstone must go
+    Seq(("a", 7L), ("x", 9L), ("dead1", 5L)).toDF("u", "nv")
+      .createOrReplaceTempView("src_twin")
+    def merge(t: String, on: String) = s"""
+      MERGE INTO $t tg USING src_twin s ON $on
+      WHEN MATCHED THEN UPDATE SET tg.v = s.nv
+      WHEN NOT MATCHED THEN INSERT (url, v, tag) VALUES (s.u, s.nv, 'ins')
+    """
+    both(merge(pt, "tg.url = s.u"), merge(ut, "tg.url = s.u OR tg.url IS NULL"))
+    both(s"DELETE FROM $pt WHERE url IN ('a', 'b')",
+      s"DELETE FROM $ut WHERE url = 'a' OR url = 'b'")
+    assert(state(udir) === Map("c" -> (3L, "x"), "d" -> (4L, "x"),
+      "e" -> (5L, "x"), "x" -> (9L, "ins"), "dead1" -> (5L, "ins")))
+    assert(internal(udir).count(_.getBoolean(5)) == 1) // dead2's tombstone
   }
 
   test("no-op merge (no clause fires) commits nothing") {

@@ -154,9 +154,12 @@ class TrainingDataOpsSpec extends SparkTestBase {
       "the distributed loop") {
     // mixed shapes: chain, star, triangle, isolated pair — compare the
     // size-checked driver branch against the loop (forced via bound 0)
-    val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (50L, 51L), (50L, 52L),
+    // plus one pair with a null id, which both branches must drop alike
+    val pairs = ((Seq((1L, 2L), (2L, 3L), (3L, 4L), (50L, 51L), (50L, 52L),
       (50L, 53L), (60L, 61L), (61L, 62L), (60L, 62L), (70L, 71L)) ++
-      (100L until 140L).map(i => (i, i + 1))).toDF("a_id", "b_id")
+      (100L until 140L).map(i => (i, i + 1)))
+      .map { case (a, b) => (Option(a), Option(b)) } :+ ((None, Some(80L))))
+      .toDF("a_id", "b_id")
     val driver = DedupOps.connectedComponents(pairs, "a_id", "b_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val loop = DedupOps.connectedComponents(pairs, "a_id", "b_id",
